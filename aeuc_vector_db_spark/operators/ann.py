@@ -34,6 +34,11 @@ from pyspark.sql import functions as F
 
 from aeuc_vector_db_spark.functions.similarity import similarity_col
 from aeuc_vector_db_spark.functions.vector import as_double
+from aeuc_vector_db_spark.operators.search import (
+    arrow_topk,
+    exact_rerank,
+    knn_search_batch_arrow,
+)
 
 
 def build_ivf_index(
@@ -72,34 +77,6 @@ def build_ivf_index(
     return centroids, assignments
 
 
-def fit_centroids_sample(
-    corpus: DataFrame,
-    k: int = 8,
-    seed: int = 42,
-    iters: int = 10,
-    sample_mod: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Driver-side Lloyd fit on a deterministic sample — the FAISS-style
-    IVF training recipe: the coarse quantizer trains on a bounded sample
-    (k is small; the quantizer needs shape, not the full corpus), then
-    assignment runs distributed (assign_centroids).
-
-    sample_mod=None uses every row (small corpora); sample_mod=m keeps
-    ~1/m of rows via pmod(xxhash64(id), m)=0 — deterministic,
-    filter-pushdown-friendly, no sort, no full-corpus collect at scale.
-
-    Returns (centroid_id INT, centroid ARRAY<DOUBLE>) — k rows.
-    Deterministic for a given (seed, sample): pure NumPy, no partition-
-    order dependence, unlike the MLlib fit.
-    """
-    return corpus.sparkSession.createDataFrame(
-        fit_centroids_sample_local(corpus, k, seed, iters, sample_mod, id_col, vec_col),
-        "centroid_id int, centroid array<double>",
-    )
-
-
 def _derive_sample_mod(df: DataFrame, sample_mod: int | None, cap: int) -> int:
     """Bound a driver-side training collect BY CONSTRUCTION.
 
@@ -125,11 +102,16 @@ def fit_centroids_sample_local(
     vec_col: str = "embedding",
     sample_cap: int = 0,
 ) -> list[tuple[int, list[float]]]:
-    """fit_centroids_sample's driver-side core: returns the k centroids
-    as a plain [(centroid_id, vector)] list. Useful when the caller also
-    needs the centroids locally (assign_centroids closes over the matrix)
-    — fetching the list here and building the DataFrame from it avoids a
-    second collect job.
+    """Driver-side Lloyd fit on a deterministic sample — the FAISS-style
+    IVF training recipe: the coarse quantizer trains on a bounded sample
+    (k is small; the quantizer needs shape, not the full corpus), then
+    assignment runs distributed (assign_centroids, which also accepts
+    the returned [(centroid_id, vector)] list directly — no collect).
+    Sampling keeps ~1/m of rows via pmod(xxhash64(id), m)=0 —
+    deterministic, filter-pushdown-friendly, no sort. Deterministic for
+    a given (seed, sample): pure NumPy, no partition-order dependence,
+    unlike the MLlib fit. Build the (centroid_id INT, centroid
+    ARRAY<DOUBLE>) DataFrame from the list when a plan needs one.
 
     The driver collect is ALWAYS bounded: `sample_mod=None` (default)
     auto-derives the sampling modulus from a cheap count() so the
@@ -321,6 +303,27 @@ def coarse_probe(
     )
 
 
+def _probe(
+    centroids: DataFrame,
+    queries: DataFrame,
+    nprobe: int,
+    metric: str,
+    query_id_col: str,
+    query_vec_col: str,
+) -> "tuple[dict, list]":
+    """The collected coarse probe every Arrow IVF path starts from:
+    ({query_id: set of probed cell ids}, sorted union of all probed
+    cells). The map is the per-query cell mask `arrow_topk` applies;
+    the union filters the scan (PartitionFilters on cell-partitioned
+    storage). Q·nprobe ints — bounded by the query batch."""
+    query_cells: dict = {}
+    for r in coarse_probe(
+        centroids, queries, nprobe, metric, query_id_col, query_vec_col
+    ).collect():
+        query_cells.setdefault(r[query_id_col], set()).add(r["centroid_id"])
+    return query_cells, sorted({c for cs in query_cells.values() for c in cs})
+
+
 def ivf_search_batch(
     corpus_with_cells: DataFrame,
     centroids: DataFrame,
@@ -411,15 +414,9 @@ def ivf_search_batch_arrow(
     low-order bits, np.dot pairwise summation — the knn_search_batch
     twin situation, pinned by test_ann.py).
     """
-    from aeuc_vector_db_spark.operators.search import knn_search_batch_arrow
-
-    cell_rows = coarse_probe(
+    query_cells, union = _probe(
         centroids, queries, nprobe, metric, query_id_col, query_vec_col
-    ).collect()
-    query_cells: dict = {}
-    for r in cell_rows:
-        query_cells.setdefault(r[query_id_col], set()).add(r["centroid_id"])
-    union = sorted({c for cs in query_cells.values() for c in cs})
+    )
     pruned = corpus_with_cells.filter(F.col("centroid_id").isin(union))
     return knn_search_batch_arrow(
         pruned,
@@ -460,8 +457,6 @@ def ivf_recall_eval_arrow(
     identical to `ivf_recall_eval`'s — asserted in test_ann.py. The
     SQL form remains the cross-engine-parity tool; this is the one to
     run."""
-    from aeuc_vector_db_spark.operators.search import knn_search_batch_arrow
-
     exact = knn_search_batch_arrow(
         corpus_with_cells,
         queries,
@@ -1079,114 +1074,47 @@ def pq_search_batch(
     When every subvector coincides with a codebook centroid the ADC
     distance is EXACT, which is the correctness pin in test_ann.py.
 
-    The codes never shuffle (mapInPandas partial top-k per partition,
-    then a global rank over Q·top_k·partitions finalist rows) — the
-    knn_search_batch_arrow shape in the compressed domain. Queries are
+    The codes never shuffle: `arrow_topk` (search.py) keeps a per-
+    partition top-k and ranks the Q·top_k·partitions finalists — the
+    knn_search_batch_arrow shape in the compressed domain. PQ makes
+    exact score ties COMMON (rows sharing codes score identically), so
+    that core's tie-aware cut is load-bearing here. With `query_cells`
+    (IVFADC) each query scores only its masked rows. Queries are
     collected (bounded: Q·d floats), the codebook rides in the closure.
     """
     import numpy as np
-    import pandas as pd
 
     cb = np.asarray(codebooks, dtype=np.float64)  # (m, ksub, dsub)
     m, ksub, dsub = cb.shape
-    q_rows = sorted(
-        queries.select(
-            F.col(query_id_col), as_double(query_vec_col).alias("__qv__")
-        ).collect(),
-        key=lambda r: r[query_id_col],
-    )
-    qids = [r[query_id_col] for r in q_rows]
-    qmat = np.asarray([list(r["__qv__"]) for r in q_rows], dtype=np.float64)
-    if qmat.shape[1] != m * dsub:
-        raise ValueError(
-            f"query dim {qmat.shape[1]} != codebook dim {m * dsub}"
-        )
-    qsub = qmat.reshape(len(qids), m, dsub)
-    # (Q, m, ksub) exact subspace distance tables, computed once
-    luts = (
-        (cb * cb).sum(axis=2)[None, :, :]
-        - 2.0 * np.einsum("qmd,mkd->qmk", qsub, cb)
-        + (qsub * qsub).sum(axis=2)[:, :, None]
-    )
     rows_idx = np.arange(m)
 
-    # derive id types from the input schemas (mirrors
-    # knn_search_batch_arrow, search.py:211) — hard-coding `long` would
-    # fail or miscast string / int32 ids at runtime
-    qid_type = queries.schema[query_id_col].dataType.simpleString()
-    id_type = codes_df.schema[id_col].dataType.simpleString()
-    out_schema = (
-        f"{query_id_col} {qid_type}, {id_col} {id_type}, score double"
-    )
-
-    allowed = (
-        {qid: np.asarray(sorted(cs)) for qid, cs in query_cells.items()}
-        if query_cells is not None
-        else None
-    )
-
-    def scan(batches):
-        for pdf in batches:
-            # np.asarray over the python list: string ids become '<U'
-            # dtype (lexsort-able), where .to_numpy() would yield object
-            ids = np.asarray(pdf[id_col].tolist())
-            code_lists = pdf["codes"].tolist()
-            ok = np.array(
-                [c is not None and len(c) == m for c in code_lists], dtype=bool
+    def make_scorer(qmat):
+        if qmat.shape[1] != m * dsub:
+            raise ValueError(
+                f"query dim {qmat.shape[1]} != codebook dim {m * dsub}"
             )
-            if not ok.any():
-                continue
-            ids = ids[ok]
-            cells_arr = (
-                pdf[cell_col].to_numpy()[ok] if allowed is not None else None
-            )
-            codes = np.asarray(
-                [code_lists[i] for i in np.flatnonzero(ok)], dtype=np.int64
-            )  # (B, m)
-            parts = []
-            for qi, qid in enumerate(qids):
-                if cells_arr is not None:
-                    # IVFADC mask: this query ranks only rows whose cell
-                    # its coarse probe selected
-                    vi = np.flatnonzero(
-                        np.isin(cells_arr, allowed.get(qid, ()))
-                    )
-                    if vi.size == 0:
-                        continue
-                    q_codes, q_ids = codes[vi], ids[vi]
-                else:
-                    q_codes, q_ids = codes, ids
-                d2 = luts[qi][rows_idx[:, None], q_codes.T].sum(axis=0)  # (B,)
-                s = 1.0 / (1.0 + np.sqrt(np.maximum(d2, 0.0)))
-                # tie-aware per-partition cut (mirrors search.py:270): PQ
-                # makes exact score ties COMMON (rows sharing codes score
-                # identically), and a bare argpartition would slice
-                # arbitrarily through the tied boundary — dropping the
-                # lowest-id tied row the (score DESC, id ASC) contract
-                # keeps, varying with partitioning
-                cand = np.lexsort((q_ids, -s))[: min(top_k, len(s))]
-                parts.append(
-                    pd.DataFrame(
-                        {
-                            query_id_col: qid,
-                            id_col: q_ids[cand],
-                            "score": s[cand],
-                        }
-                    )
-                )
-            if parts:
-                yield pd.concat(parts, ignore_index=True)
+        qsub = qmat.reshape(len(qmat), m, dsub)
+        # (Q, m, ksub) exact subspace distance tables, computed once
+        luts = (
+            (cb * cb).sum(axis=2)[None, :, :]
+            - 2.0 * np.einsum("qmd,mkd->qmk", qsub, cb)
+            + (qsub * qsub).sum(axis=2)[:, :, None]
+        )
 
-    sel = [id_col, "codes"] + ([cell_col] if allowed is not None else [])
-    finalists = codes_df.select(*sel).mapInPandas(scan, out_schema)
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("score").desc(), F.col(id_col).asc()
-    )
-    return (
-        finalists.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= top_k)
-        .orderBy(query_id_col, "rank")
-    )
+        def score(codes, rows):
+            out = []
+            for lut, r in zip(luts, rows):
+                d2 = lut[rows_idx[:, None], codes[r].T].sum(axis=0)  # (B,)
+                out.append(1.0 / (1.0 + np.sqrt(np.maximum(d2, 0.0))))
+            return out
+
+        return score
+
+    return arrow_topk(
+        codes_df, queries, make_scorer, "codes", top_k,
+        id_col, query_id_col, query_vec_col, width=m, dtype="int64",
+        cell_col=cell_col, query_cells=query_cells,
+    ).orderBy(query_id_col, "rank")
 
 
 def pq_recall_eval(
@@ -1207,8 +1135,6 @@ def pq_recall_eval(
     intersection per query. The accuracy/cost knob is (m, nbits);
     recall → 1 as codebooks approach the data (pinned exactly in
     test_ann.py). Returns (query_id, recall)."""
-    from aeuc_vector_db_spark.operators.search import knn_search_batch_arrow
-
     books = pq_train(
         corpus, m=m, nbits=nbits, seed=seed, sample_mod=sample_mod,
         id_col=id_col, vec_col=vec_col,
@@ -1365,8 +1291,6 @@ def opq_recall_eval(
     test_rotation_preserves_exact_topk). Returns (query_id, recall),
     the same contract as `pq_recall_eval` for an apples-to-apples
     OPQ-vs-PQ comparison."""
-    from aeuc_vector_db_spark.operators.search import knn_search_batch_arrow
-
     R, books = opq_train(
         corpus, m=m, nbits=nbits, seed=seed, iters=iters,
         sample_mod=sample_mod, id_col=id_col, vec_col=vec_col,
@@ -1417,10 +1341,6 @@ def pq_search_refined(
     vectors are read for R rows per query, not N. refine_r is the
     recall knob: R = k degenerates to plain ADC ranking, R → N to
     exact search (both pinned in test_ann.py)."""
-    from pyspark.sql import Window
-
-    from aeuc_vector_db_spark.functions.similarity import euclidean_similarity_col
-
     if refine_r < top_k:
         raise ValueError(f"refine_r ({refine_r}) must be >= top_k ({top_k})")
     cands = pq_search_batch(
@@ -1428,24 +1348,9 @@ def pq_search_refined(
         query_id_col=query_id_col, query_vec_col=query_vec_col,
         cell_col=cell_col, query_cells=query_cells,
     ).select(query_id_col, id_col)
-    exact = (
-        corpus.select(id_col, vec_col)
-        .join(F.broadcast(cands), id_col)
-        .join(F.broadcast(queries.select(query_id_col, query_vec_col)), query_id_col)
-        .withColumn(
-            "score",
-            euclidean_similarity_col(
-                as_double(F.col(vec_col)), as_double(F.col(query_vec_col))
-            ),
-        )
-    )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("score").desc(), F.col(id_col).asc()
-    )
-    return (
-        exact.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= top_k)
-        .select(query_id_col, id_col, "score", "rank")
+    return exact_rerank(
+        corpus, cands, queries, top_k, "euclidean",
+        id_col, vec_col, query_id_col, query_vec_col,
     )
 
 
@@ -1468,8 +1373,6 @@ def pq_refine_recall_eval(
     construction whenever R > k (the exact re-rank can only promote
     true neighbors the ADC ranking mis-ordered within its top R) —
     asserted in test_ann.py. Returns (query_id, recall)."""
-    from aeuc_vector_db_spark.operators.search import knn_search_batch_arrow
-
     books = pq_train(
         corpus, m=m, nbits=nbits, seed=seed, sample_mod=sample_mod,
         id_col=id_col, vec_col=vec_col,
@@ -1509,13 +1412,9 @@ def ivfadc_search_batch(
     cell-masked `pq_search_batch`; each query still ranks exactly its
     own probed cells. nprobe = k degenerates to plain PQ search
     (pinned in test_ann.py)."""
-    cell_rows = coarse_probe(
+    query_cells, union = _probe(
         centroids, queries, nprobe, "euclidean", query_id_col, query_vec_col
-    ).collect()
-    query_cells: dict = {}
-    for r in cell_rows:
-        query_cells.setdefault(r[query_id_col], set()).add(r["centroid_id"])
-    union = sorted({c for cs in query_cells.values() for c in cs})
+    )
     pruned = codes_with_cells.filter(F.col(cell_col).isin(union))
     return pq_search_batch(
         pruned, codebooks, queries, top_k=top_k, id_col=id_col,
@@ -1544,8 +1443,6 @@ def ivfadc_recall_eval(
     search runs against the Arrow exact baseline. Two approximation
     knobs stack (nprobe recall loss × ADC quantization loss) — the
     honest number a deployment tunes. Returns (query_id, recall)."""
-    from aeuc_vector_db_spark.operators.search import knn_search_batch_arrow
-
     cent_local = fit_centroids_sample_local(
         corpus, k=k_cells, seed=seed, id_col=id_col, vec_col=vec_col
     )
@@ -1603,13 +1500,9 @@ def ivfadc_search_disk(
     ADC ranking inside the Arrow kernel. Identical results to the
     in-memory `ivfadc_search_batch` over the same codes (rank parity
     pinned); what changes is the IO: unprobed cells are never read."""
-    cell_rows = coarse_probe(
+    query_cells, union = _probe(
         centroids, queries, nprobe, "euclidean", query_id_col, query_vec_col
-    ).collect()
-    query_cells: dict = {}
-    for r in cell_rows:
-        query_cells.setdefault(r[query_id_col], set()).add(r["centroid_id"])
-    union = sorted({c for cs in query_cells.values() for c in cs})
+    )
     pruned = read_pruned(spark, path, union)
     return pq_search_batch(
         pruned, codebooks, queries, top_k=top_k, id_col=id_col,

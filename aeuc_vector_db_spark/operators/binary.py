@@ -33,8 +33,7 @@ import math
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from aeuc_vector_db_spark.functions.similarity import cosine_col
-from aeuc_vector_db_spark.functions.vector import as_double
+from aeuc_vector_db_spark.operators.search import arrow_topk, exact_rerank
 
 WORD_BITS = 32  # bits per packed word; 2^31 ≤ BIGINT so sums stay exact
 
@@ -115,24 +114,9 @@ def binary_search_rerank(
         .filter(F.col("hrank") <= refine_r)
         .select(query_id_col, id_col, "hamming")
     )
-    # exact re-rank: candidates (Q·R rows) broadcast onto the float
-    # corpus — the only stage that touches float vectors reads N·(R/N)
-    # of them via the join, never shuffling the corpus
-    exact = (
-        corpus.select(id_col, vec_col)
-        .join(F.broadcast(cands), id_col)
-        .join(F.broadcast(queries.select(query_id_col, query_vec_col)), query_id_col)
-        .withColumn(
-            "score", cosine_col(as_double(F.col(vec_col)), as_double(F.col(query_vec_col)))
-        )
-    )
-    w_s = Window.partitionBy(query_id_col).orderBy(
-        F.col("score").desc(), F.col(id_col).asc()
-    )
-    return (
-        exact.withColumn("rank", F.row_number().over(w_s))
-        .filter(F.col("rank") <= top_k)
-        .select(query_id_col, id_col, "hamming", "score", "rank")
+    return exact_rerank(
+        corpus, cands, queries, top_k, "cosine",
+        id_col, vec_col, query_id_col, query_vec_col,
     )
 
 
@@ -149,10 +133,11 @@ def binary_search_rerank_arrow(
     packed: DataFrame | None = None,
 ) -> DataFrame:
     """Arrow twin of `binary_search_rerank` — same two-stage semantics,
-    stage 1 vectorized: the packed words stream through mapInPandas as
-    uint64 lanes, Hamming = 16-bit-LUT popcount of xor (NumPy, whole
-    batch × all queries at once), per-partition top-R via the tie-aware
-    lexsort cut (search.py:270 convention), then the same exact cosine
+    stage 1 vectorized in the shared `arrow_topk` core: the packed words
+    stream through as uint64 lanes, Hamming = SWAR popcount of xor
+    (NumPy, whole batch × all queries at once), ranked by NEGATED
+    Hamming so the core's (score DESC, id ASC) tie-aware cut keeps the
+    R smallest distances, lowest id first; then the same exact cosine
     re-rank. Rank-for-rank equal to the SQL twin (pinned in
     test_binary.py) — the SQL path carries the DuckDB oracle, this
     path carries the throughput.
@@ -160,94 +145,42 @@ def binary_search_rerank_arrow(
     Pass `packed` (from `sign_pack(corpus, dim, prefix="cw")`, persisted)
     to scan the 16-byte/row packed table instead of re-packing floats —
     the materialized-index shape a 100 TB corpus would use."""
-    import math as _math
-
     import numpy as np
-    import pandas as pd  # noqa: F401  (mapInPandas contract)
 
-    n_words = _math.ceil(dim / WORD_BITS)
-    cp = (
-        packed
-        if packed is not None
-        else sign_pack(corpus, dim, vec_col, id_col, prefix="cw")
+    n_words = math.ceil(dim / WORD_BITS)
+    cp = packed if packed is not None else sign_pack(corpus, dim, vec_col, id_col, prefix="cw")
+    # the query side packs with the same JVM rule, as one words array
+    # the core collects (word values < 2^32 survive its double widening)
+    qp = queries.select(
+        F.col(query_id_col),
+        F.array(*sign_pack_cols(query_vec_col, dim)).alias(query_vec_col),
     )
-    qp_rows = sorted(
-        sign_pack(queries, dim, query_vec_col, query_id_col, prefix="qw").collect(),
-        key=lambda r: r[query_id_col],
-    )
-    q_ids = [r[query_id_col] for r in qp_rows]
-    q_words = np.asarray(
-        [[r[f"qw{j}"] for j in range(n_words)] for r in qp_rows], dtype=np.uint64
-    )  # (Q, W)
 
-    qid_type = queries.schema[query_id_col].dataType.simpleString()
-    id_type = corpus.schema[id_col].dataType.simpleString()
-    out_schema = f"{query_id_col} {qid_type}, {id_col} {id_type}, hamming int"
+    def make_scorer(q_mat):
+        q_words = q_mat.astype(np.uint64)  # (Q, W)
 
-    def partition_topr(batches):
-        # 64 KB LUT built once per worker invocation: popcount of every
-        # 16-bit lane value
-        lut = np.array([bin(i).count("1") for i in range(65536)], dtype=np.uint16)
-        best: dict = {}
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids_py = pdf[id_col].tolist()
-            ids = np.asarray(ids_py)
-            words = np.empty((len(pdf), n_words), dtype=np.uint64)
-            for j in range(n_words):
-                words[:, j] = pdf[f"cw{j}"].to_numpy(dtype=np.int64).astype(np.uint64)
-            # (B, Q, W) xor → uint16 lanes → LUT → per-pair popcount sum
-            x = words[:, None, :] ^ q_words[None, :, :]
-            lanes = x.view(np.uint16).reshape(len(pdf), len(q_ids), n_words * 4)
-            ham = lut[lanes].sum(axis=2, dtype=np.int64)  # (B, Q)
-            for qi, qid in enumerate(q_ids):
-                col = ham[:, qi]
-                take = min(refine_r, len(col))
-                # lexsort (id asc secondary, hamming asc primary): the
-                # tie-aware cut — Hamming ties are the COMMON case
-                order = np.lexsort((ids, col))[:take]
-                cand = best.setdefault(qid, [])
-                cand.extend((int(col[i]), ids_py[i]) for i in order)
-                if len(cand) > 4 * refine_r:
-                    cand.sort(key=lambda t: (t[0], t[1]))
-                    del cand[refine_r:]
-        import pandas as pd
+        def score(words, rows):
+            x = words.view(np.uint64)[:, None, :] ^ q_words[None, :, :]  # (B, Q, W)
+            # SWAR popcount per 64-bit lane
+            x = x - ((x >> np.uint64(1)) & np.uint64(0x5555555555555555))
+            x = (x & np.uint64(0x3333333333333333)) + (
+                (x >> np.uint64(2)) & np.uint64(0x3333333333333333)
+            )
+            x = (x + (x >> np.uint64(4))) & np.uint64(0x0F0F0F0F0F0F0F0F)
+            ham = ((x * np.uint64(0x0101010101010101)) >> np.uint64(56)).sum(axis=2)
+            neg = -ham.astype(np.float64)  # (B, Q)
+            return [neg[r, j] for j, r in enumerate(rows)]
 
-        rows = []
-        for qid, cand in best.items():
-            cand.sort(key=lambda t: (t[0], t[1]))
-            rows.extend((qid, vid, h) for h, vid in cand[:refine_r])
-        yield pd.DataFrame(
-            rows, columns=[query_id_col, id_col, "hamming"]
-        ) if rows else pd.DataFrame(
-            {query_id_col: [], id_col: [], "hamming": []}
-        )
+        return score
 
-    from pyspark.sql import Window
-
-    finalists = cp.mapInPandas(partition_topr, out_schema)
-    w_h = Window.partitionBy(query_id_col).orderBy(
-        F.col("hamming").asc(), F.col(id_col).asc()
+    words = cp.select(
+        id_col, F.array(*[F.col(f"cw{j}") for j in range(n_words)]).alias("__words__")
     )
-    cands = (
-        finalists.withColumn("hrank", F.row_number().over(w_h))
-        .filter(F.col("hrank") <= refine_r)
-        .select(query_id_col, id_col, "hamming")
-    )
-    exact = (
-        corpus.select(id_col, vec_col)
-        .join(F.broadcast(cands), id_col)
-        .join(F.broadcast(queries.select(query_id_col, query_vec_col)), query_id_col)
-        .withColumn(
-            "score", cosine_col(as_double(F.col(vec_col)), as_double(F.col(query_vec_col)))
-        )
-    )
-    w_s = Window.partitionBy(query_id_col).orderBy(
-        F.col("score").desc(), F.col(id_col).asc()
-    )
-    return (
-        exact.withColumn("rank", F.row_number().over(w_s))
-        .filter(F.col("rank") <= top_k)
-        .select(query_id_col, id_col, "hamming", "score", "rank")
+    cands = arrow_topk(
+        words, qp, make_scorer, "__words__", refine_r,
+        id_col, query_id_col, query_vec_col, width=n_words, dtype="int64",
+    ).select(query_id_col, id_col, (-F.col("score")).cast("int").alias("hamming"))
+    return exact_rerank(
+        corpus, cands, queries, top_k, "cosine",
+        id_col, vec_col, query_id_col, query_vec_col,
     )

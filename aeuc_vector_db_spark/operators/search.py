@@ -17,33 +17,26 @@ Spark plan shape:
   corpus (scored in one pass), then row_number() over a window partitioned
   by query id. The corpus is scanned once for ALL queries — this is how
   Spark beats the reference's per-query rescans.
+- Arrow scale path → `arrow_topk`, the one per-partition top-k + global
+  merge core the exact, PQ (ann.py) and binary (binary.py) kernels
+  share; compressed-domain candidates re-score through `exact_rerank`.
 """
 
 from __future__ import annotations
 
-from typing import Sequence
+from typing import Callable, Iterator, Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from aeuc_vector_db_spark.functions.similarity import (
+    METRICS,
+    _phi_scores_sequential,
     phi_weighted_pair_pandas,
     phi_weighted_pandas,
     similarity_col,
 )
 from aeuc_vector_db_spark.functions.vector import as_double, lit_vector
-
-
-def _ensure_parallel(df: DataFrame, min_partitions: int | None) -> DataFrame:
-    """Repartition ONLY if the scan is under-parallel (e.g. a single small
-    parquet file → 1 task, serializing O(N·d·Q) scoring on 1 of 32 cores).
-
-    At cluster scale the file source already yields many partitions and
-    this is a no-op — we never add a shuffle to an already-parallel scan.
-    """
-    if min_partitions and df.rdd.getNumPartitions() < min_partitions:
-        return df.repartition(min_partitions)
-    return df
 
 
 def knn_search(
@@ -91,7 +84,6 @@ def knn_search_batch(
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
     query_vec_col: str = "query_embedding",
-    min_partitions: int | None = None,
 ) -> DataFrame:
     """Batched exact k-NN: one corpus scan scores every query.
 
@@ -104,7 +96,6 @@ def knn_search_batch(
     row) and measured ~200× slower than the reference at sf0.1; the NumPy
     path is bit-identical (sequential folds) and vectorized.
     """
-    corpus = _ensure_parallel(corpus, min_partitions)
     q = F.broadcast(
         queries.select(
             F.col(query_id_col).alias("__qid__"),
@@ -128,6 +119,113 @@ def knn_search_batch(
     )
 
 
+def arrow_topk(
+    corpus: DataFrame,
+    queries: DataFrame,
+    make_scorer: Callable,
+    in_col: str,
+    top_k: int,
+    id_col: str,
+    query_id_col: str,
+    query_vec_col: str,
+    width: int | None = None,
+    dtype: str = "float64",
+    cell_col: str | None = None,
+    query_cells: dict | None = None,
+) -> DataFrame:
+    """The cell-masked Arrow top-k core every vectorized search kernel
+    shares (exact k-NN, PQ ADC, binary Hamming): a per-partition local
+    top-k, then a global merge — the REPOSE shape for distributed top-k
+    similarity search. Kernels supply only their scoring arithmetic.
+
+    The query set is collected (small by construction) to a (Q, d)
+    float64 matrix and handed to `make_scorer` on the driver, which
+    returns `score(block, rows)`: `block` is one Arrow batch's array
+    column `in_col` as a (B, width) `dtype` matrix, `rows[j]` selects query j's rows
+    (`slice(None)`, or the index array of its probed cells), and the
+    result is one 1-D score array per query over exactly those rows —
+    higher is better. The corpus is scanned ONCE via mapInPandas; NULL
+    or wrong-width rows are dropped per row (a ragged np.asarray would
+    abort the whole job, while the SQL twins null-propagate them out of
+    the top-k). `cell_col` + `query_cells` (qid → iterable of allowed
+    cell ids) mask each query to its own probed cells — the IVF fine
+    scan. Only k·Q rows leave each partition: every batch is merged
+    into the running per-query top-k by a lexsort on (score DESC,
+    id ASC) — the tie-aware cut, since a bare argpartition would slice
+    arbitrarily through TIED scores at the k-th place and could drop
+    the id the determinism contract keeps. A final row_number window
+    picks the global top-k. Returns (query_id, id, score, rank), id
+    types following the inputs (string ids sort the same as long ones
+    — the id never enters the arithmetic, only the sort).
+    """
+    import numpy as np
+    import pandas as pd
+
+    q_rows = queries.select(
+        F.col(query_id_col), as_double(query_vec_col).alias("__qv__")
+    ).collect()
+    if not q_rows:
+        raise ValueError("empty query set")
+    q_ids = [r[query_id_col] for r in q_rows]
+    q_mat = np.asarray([list(r["__qv__"]) for r in q_rows], dtype=np.float64)
+    score = make_scorer(q_mat)
+    if width is None:
+        width = q_mat.shape[1]
+    allowed = (
+        {qid: np.asarray(sorted(cs)) for qid, cs in query_cells.items()}
+        if query_cells is not None
+        else None
+    )
+
+    def partition_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        best: dict = {}
+        for pdf in batches:
+            vals = pdf[in_col].tolist()
+            ok = [i for i, v in enumerate(vals) if v is not None and len(v) == width]
+            if not ok:
+                continue
+            if len(ok) < len(vals):
+                pdf = pdf.iloc[ok]
+                vals = [vals[i] for i in ok]
+            # np.asarray over the python list: string ids become '<U' dtype
+            # (lexsort-able), where pandas .to_numpy() would yield object
+            ids = np.asarray(pdf[id_col].tolist())
+            if allowed is None:
+                rows = [slice(None)] * len(q_ids)
+            else:
+                cells = pdf[cell_col].to_numpy()
+                rows = [
+                    np.flatnonzero(np.isin(cells, allowed.get(qid, ()))) for qid in q_ids
+                ]
+            for qid, r, s in zip(q_ids, rows, score(np.asarray(vals, dtype=dtype), rows)):
+                if not len(s):
+                    continue
+                c_ids, c_s = ids[r], s
+                if qid in best:
+                    c_ids = np.concatenate((best[qid][0], c_ids))
+                    c_s = np.concatenate((best[qid][1], c_s))
+                keep = np.lexsort((c_ids, -c_s))[:top_k]
+                best[qid] = (c_ids[keep], c_s[keep])
+        out = [
+            (qid, i, s)
+            for qid, (c_ids, c_s) in best.items()
+            for i, s in zip(c_ids.tolist(), c_s.tolist())
+        ]
+        if out:
+            yield pd.DataFrame(out, columns=[query_id_col, id_col, "score"])
+
+    qid_type = queries.schema[query_id_col].dataType.simpleString()
+    id_type = corpus.schema[id_col].dataType.simpleString()
+    proj = [id_col, in_col] + ([cell_col] if allowed is not None else [])
+    partial = corpus.select(*proj).mapInPandas(
+        partition_topk, f"{query_id_col} {qid_type}, {id_col} {id_type}, score double"
+    )
+    w = Window.partitionBy(query_id_col).orderBy(F.col("score").desc(), F.col(id_col).asc())
+    return partial.withColumn("rank", F.row_number().over(w)).filter(
+        F.col("rank") <= F.lit(top_k)
+    )
+
+
 def knn_search_batch_arrow(
     corpus: DataFrame,
     queries: DataFrame,
@@ -137,24 +235,16 @@ def knn_search_batch_arrow(
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
     query_vec_col: str = "query_embedding",
-    min_partitions: int | None = None,
     cell_col: str | None = None,
     query_cells: dict | None = None,
 ) -> DataFrame:
-    """Arrow-vectorized batch k-NN — the 100 TB hot path.
+    """Arrow-vectorized batch k-NN — the 100 TB hot path: `arrow_topk`
+    with exact NumPy scoring, one (B, Q) matrix product per Arrow batch.
 
-    cell_col + query_cells (qid → iterable of allowed cell ids) turn
-    this into the IVF fine scan: rows whose cell is outside a query's
-    probed set are masked out of that query's ranking (ann.py
-    ivf_search_batch_arrow composes this with partition pruning — the
+    cell_col + query_cells turn this into the IVF fine scan (ann.py
+    ivf_search_batch_arrow composes it with partition pruning — the
     interpreted-HOF fine scan measured 10× slower than this kernel's
-    full scan at N=1M, so pruning must not fall back to it).
-
-    The query set is collected to a (Q, d) matrix (small by construction)
-    and closed over; the corpus is scanned ONCE as Arrow batches via
-    mapInPandas, scored with NumPy matrix math, and reduced to a
-    per-partition top-k heap per query — only k·Q rows leave each
-    partition, then a final window picks the global top-k. Compare
+    full scan at N=1M, so pruning must not fall back to it). Compare
     knn_search_batch (SQL expression path): same results rank-for-rank,
     but the crossJoin ships (embedding, query) pairs and the higher-order
     functions evaluate interpreted — measured ~8 s vs ~0.5 s for
@@ -165,129 +255,78 @@ def knn_search_batch_arrow(
 
     Returns (query_id, id, score, rank) like knn_search_batch.
     """
-    from typing import Iterator
-
     import numpy as np
-    import pandas as pd
 
-    from aeuc_vector_db_spark.functions.similarity import _phi_scores_sequential
-
-    q_rows = queries.select(query_id_col, query_vec_col).collect()
-    if not q_rows:
-        raise ValueError("empty query set")
-    q_ids = [r[query_id_col] for r in q_rows]
-    q_mat = np.asarray([list(r[query_vec_col]) for r in q_rows], dtype=np.float64)
-
-    def score_block(mat: np.ndarray) -> np.ndarray:
-        """(B, d) corpus block → (B, Q) score matrix."""
-        if metric == "cosine":
-            dots = mat @ q_mat.T
-            denom = (
-                np.linalg.norm(mat, axis=1)[:, None] * np.linalg.norm(q_mat, axis=1)[None, :]
-                + 1e-12
-            )
-            return dots / denom
-        if metric == "dot":
-            return mat @ q_mat.T
-        if metric == "euclidean":
-            # direct differences per query — the ‖a‖²−2ab+‖b‖² expansion
-            # cancels catastrophically for near-identical vectors
-            out = np.empty((mat.shape[0], q_mat.shape[0]))
-            for j in range(q_mat.shape[0]):
-                diff = mat - q_mat[j]
-                out[:, j] = 1.0 / (1.0 + np.sqrt((diff * diff).sum(axis=1)))
-            return out
-        if metric == "phi_weighted":
-            out = np.empty((mat.shape[0], q_mat.shape[0]))
-            for j in range(q_mat.shape[0]):
-                out[:, j] = _phi_scores_sequential(
-                    mat, np.broadcast_to(q_mat[j], mat.shape)
-                )
-            return out
+    if metric not in METRICS:
         raise ValueError(f"Unknown metric {metric!r}")
 
-    # id column types follow the inputs — string iglyph ids work the same
-    # as long vec_ids (the id never enters the arithmetic, only the sort)
-    qid_type = queries.schema[query_id_col].dataType.simpleString()
-    id_type = corpus.schema[id_col].dataType.simpleString()
-    out_schema = f"{query_id_col} {qid_type}, {id_col} {id_type}, score double"
+    def make_scorer(q_mat):
+        def score(mat, rows):
+            if metric == "cosine":
+                s = (mat @ q_mat.T) / (
+                    np.linalg.norm(mat, axis=1)[:, None]
+                    * np.linalg.norm(q_mat, axis=1)[None, :]
+                    + 1e-12
+                )
+            elif metric == "dot":
+                s = mat @ q_mat.T
+            elif metric == "euclidean":
+                # direct differences per query — the ‖a‖²−2ab+‖b‖²
+                # expansion cancels catastrophically for near-identical
+                # vectors
+                s = np.column_stack([
+                    1.0 / (1.0 + np.sqrt(np.square(mat - q).sum(axis=1)))
+                    for q in q_mat
+                ])
+            else:
+                s = np.column_stack([
+                    _phi_scores_sequential(mat, np.broadcast_to(q, mat.shape))
+                    for q in q_mat
+                ])
+            return [s[r, j] for j, r in enumerate(rows)]
 
-    allowed_cells = (
-        {qid: np.asarray(sorted(cs)) for qid, cs in query_cells.items()}
-        if query_cells is not None
-        else None
+        return score
+
+    return arrow_topk(
+        corpus, queries, make_scorer, vec_col, top_k,
+        id_col, query_id_col, query_vec_col,
+        cell_col=cell_col, query_cells=query_cells,
+    ).orderBy(query_id_col, "rank")
+
+
+def exact_rerank(
+    corpus: DataFrame,
+    cands: DataFrame,
+    queries: DataFrame,
+    top_k: int,
+    metric: str,
+    id_col: str,
+    vec_col: str,
+    query_id_col: str,
+    query_vec_col: str,
+) -> DataFrame:
+    """Exact re-rank of a compressed-domain candidate set (PQ ADC+R,
+    binary Hamming top-R): the (query, id) candidates — Q·R rows,
+    tiny — BROADCAST onto the float corpus, each pair re-scored exactly
+    with the SQL fold, ranked (score DESC, id ASC). Only candidate
+    selection is approximate; reported scores are exact, and the corpus
+    never shuffles. Extra candidate columns (e.g. `hamming`) ride
+    through: (query_id, id, *extra, score, rank), rank ≤ top_k."""
+    extra = [c for c in cands.columns if c not in (query_id_col, id_col)]
+    scored = (
+        corpus.select(id_col, vec_col)
+        .join(F.broadcast(cands), id_col)
+        .join(F.broadcast(queries.select(query_id_col, query_vec_col)), query_id_col)
+        .withColumn(
+            "score",
+            similarity_col(as_double(F.col(vec_col)), as_double(F.col(query_vec_col)), metric),
+        )
     )
-
-    def partition_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # accumulate the per-partition top-k per query across Arrow batches
-        best: dict = {}
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            # NULL / wrong-dimension embeddings are dropped per row, not
-            # crashed on: np.vstack over a ragged batch raises and aborts
-            # the whole job after retries, while the SQL twin
-            # null-propagates (null scores sort last and fall out of the
-            # top-k) — same guard as assign_centroids' kernel
-            dim = q_mat.shape[1]
-            vec_list = pdf[vec_col].tolist()
-            ok = [
-                i for i, v in enumerate(vec_list)
-                if v is not None and len(v) == dim
-            ]
-            if not ok:
-                continue
-            if len(ok) < len(vec_list):
-                pdf = pdf.iloc[ok]
-                vec_list = [vec_list[i] for i in ok]
-            ids_py = pdf[id_col].tolist()
-            # np.asarray over the python list: string ids become '<U' dtype
-            # (lexsort-able), where pandas .to_numpy() would yield object
-            ids = np.asarray(ids_py)
-            mat = np.asarray(vec_list, dtype=np.float64)
-            scores = score_block(mat)  # (B, Q)
-            cells_arr = (
-                pdf[cell_col].to_numpy() if allowed_cells is not None else None
-            )
-            for j, qid in enumerate(q_ids):
-                col = scores[:, j]
-                if cells_arr is not None:
-                    # IVF mask: this query ranks only rows in its probed cells
-                    vi = np.flatnonzero(
-                        np.isin(cells_arr, allowed_cells.get(qid, ()))
-                    )
-                    if vi.size == 0:
-                        continue
-                    sub_ids, sub_col = ids[vi], col[vi]
-                else:
-                    vi, sub_ids, sub_col = None, ids, col
-                take = min(top_k, len(sub_col))
-                # lexsort on (id asc secondary, score desc primary): a bare
-                # argpartition on score would cut arbitrarily through TIED
-                # scores at the k-th place (e.g. planted duplicate vectors)
-                # and could drop the id the (score DESC, id ASC) contract
-                # keeps — O(B log B) per batch is noise next to the scoring
-                order = np.lexsort((sub_ids, -sub_col))[:take]
-                sel = vi[order] if vi is not None else order
-                cand = best.setdefault(qid, [])
-                cand.extend((float(col[i]), ids_py[i]) for i in sel)
-                if len(cand) > 4 * top_k:  # keep the running set bounded
-                    cand.sort(key=lambda t: (-t[0], t[1]))
-                    del cand[top_k:]
-        rows = []
-        for qid, cand in best.items():
-            cand.sort(key=lambda t: (-t[0], t[1]))
-            rows.extend((qid, vid, s) for s, vid in cand[:top_k])
-        yield pd.DataFrame(rows, columns=[query_id_col, id_col, "score"])
-
-    corpus = _ensure_parallel(corpus, min_partitions)
-    proj = [id_col, vec_col] + ([cell_col] if allowed_cells is not None else [])
-    partial = corpus.select(*proj).mapInPandas(partition_topk, out_schema)
     w = Window.partitionBy(query_id_col).orderBy(F.col("score").desc(), F.col(id_col).asc())
     return (
-        partial.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= F.lit(top_k))
-        .orderBy(query_id_col, "rank")
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= top_k)
+        .select(query_id_col, id_col, *extra, "score", "rank")
     )
 
 

@@ -228,10 +228,14 @@ def cusum_alarms(
                 F.coalesce(acc["f"], F.when(alarm, e["__id__"])).alias("f"),
             )
 
-        return let_col(
-            F.greatest(F.lit(0).cast("long"), acc["s"] + e["__v__"] - kl),
-            with_t,
-        )
+        # a NULL value would make s + v NULL, which greatest() skips —
+        # a silent state reset; raise_error fails the fold loudly
+        # instead (evaluated on the NULL branch only, no extra job)
+        v = F.when(
+            e["__v__"].isNull(),
+            F.raise_error(F.lit(f"cusum_alarms: NULL {value_col} value")),
+        ).otherwise(e["__v__"])
+        return let_col(F.greatest(F.lit(0).cast("long"), acc["s"] + v - kl), with_t)
 
     zero = F.struct(
         F.lit(0).cast("long").alias("s"),

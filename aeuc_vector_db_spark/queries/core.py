@@ -14,9 +14,9 @@ from pyspark.sql import functions as F
 from aeuc_vector_db_spark.functions.similarity import PHI_POWERS, cosine_col
 from aeuc_vector_db_spark.functions.vector import as_double
 from aeuc_vector_db_spark.operators import clustering as C
-from aeuc_vector_db_spark.operators.search import knn_search_batch
+from aeuc_vector_db_spark.operators.search import knn_search_batch, knn_search_batch_arrow
 from aeuc_vector_db_spark.operators.clustering import _phi_break_fracs
-from aeuc_vector_db_spark.sources.tables import load_table
+from aeuc_vector_db_spark.sources.tables import ensure_min_parallelism, load_table
 
 # ---------------------------------------------------------------------------
 # DuckDB SQL fragment builders (mirror functions/vector.py + similarity.py)
@@ -65,14 +65,11 @@ def _queries_df(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _knn_query(metric: str):
     def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-        emb = load_table(spark, "embeddings", sf_dir)
-        res = knn_search_batch(
-            emb,
-            _queries_df(spark, sf_dir),
-            top_k=10,
-            metric=metric,
-            min_partitions=spark.sparkContext.defaultParallelism,
+        emb = ensure_min_parallelism(
+            load_table(spark, "embeddings", sf_dir),
+            target=spark.sparkContext.defaultParallelism,
         )
+        res = knn_search_batch(emb, _queries_df(spark, sf_dir), top_k=10, metric=metric)
         return res.select(
             "query_id",
             "vec_id",
@@ -118,15 +115,11 @@ def _knn_arrow_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     bits, but the resulting RANKS are deterministic on both sides and
     oracle-able (verified identical to the sequential-fold ranking;
     twin parity also pinned in test_search_arrow.py)."""
-    from aeuc_vector_db_spark.operators.search import knn_search_batch_arrow
-
-    emb = load_table(spark, "embeddings", sf_dir)
-    res = knn_search_batch_arrow(
-        emb,
-        _queries_df(spark, sf_dir),
-        top_k=10,
-        min_partitions=spark.sparkContext.defaultParallelism,
+    emb = ensure_min_parallelism(
+        load_table(spark, "embeddings", sf_dir),
+        target=spark.sparkContext.defaultParallelism,
     )
+    res = knn_search_batch_arrow(emb, _queries_df(spark, sf_dir), top_k=10)
     return res.select(
         "query_id", "vec_id", F.col("rank").cast("long").alias("rank")
     )
@@ -857,7 +850,6 @@ def _maxsim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     spread (ensure_min_parallelism): the single-file fixture scan
     serialized the whole interpreted scorer on one task."""
     from aeuc_vector_db_spark.functions.vector import dot_col, l2_norm_col
-    from aeuc_vector_db_spark.sources.tables import ensure_min_parallelism
 
     emb = ensure_min_parallelism(load_table(spark, "embeddings", sf_dir))
 
@@ -997,7 +989,6 @@ _RANGE_THRESHOLD = 0.2
 
 def _knn_cosine_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     from aeuc_vector_db_spark.functions.vector import dot_col, l2_norm_col
-    from aeuc_vector_db_spark.sources.tables import ensure_min_parallelism
 
     # optimization round 15: the interpreted per-pair dot fold is the
     # whole query (map-side broadcast cross), and the single-file scan

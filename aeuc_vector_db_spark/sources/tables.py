@@ -94,39 +94,39 @@ def ensure_min_parallelism(df: DataFrame, target: int | None = None) -> DataFram
 
     At cluster scale a 100 TB scan already yields thousands of
     partitions, so the guard makes this a NO-OP — we never add a
-    shuffle to an already-parallel scan (same contract as
-    operators/search.py _ensure_parallel). The explicit numbered
+    shuffle to an already-parallel scan. The explicit numbered
     repartition is deliberately exempt from AQE partition coalescing,
     and round-robin repartition sorts its input first
     (spark.sql.execution.sortBeforeRepartition, default on) so task
     retries reproduce the same row placement. Row-set semantics are
     unchanged — only physical placement moves.
 
-    Parallelism probe (round 16, ADVICE r15): `df.rdd.getNumPartitions()`
-    forces full physical planning outside AQE on EVERY call — measurable
-    driver latency per query build even when the guard no-ops. The scan
-    fan-out proxy is `len(df.inputFiles())` instead: pure file-listing
-    metadata, no planning. One file can SPLIT into several scan tasks
-    (maxPartitionBytes), so the proxy under-counts tasks and the guard
-    stays conservative — it may spread a frame that already had enough
-    splits, never the reverse; for the heavy-kernel call sites this
-    helper serves (shingle/winnow/HOF-pair kernels costing seconds per
-    partition) an occasionally redundant round-robin of the projected
-    input is noise, which is also the documented BOUNDARY of this
-    helper: do not apply it to scan-bound paths where the shuffle
-    itself would dominate (VERDICT r15 — prefer lowering
-    spark.sql.files.maxPartitionBytes there)."""
+    Parallelism probe: `df.rdd.getNumPartitions()` forces full physical
+    planning outside AQE — measurable driver latency per query build —
+    so the file count (`len(df.inputFiles())`, pure listing metadata)
+    is read first. Fewer files than `target` is conclusive enough to
+    spread: one file can SPLIT into several scan tasks
+    (maxPartitionBytes), so the count may under-count tasks and spread
+    a frame that already had enough splits — for the heavy-kernel call
+    sites this helper serves (shingle/winnow/HOF-pair kernels costing
+    seconds per partition) that redundant round-robin is noise. The
+    opposite error is not: many small files PACK into few splits
+    (openCostInBytes/maxPartitionBytes packing, worst under the
+    512 MB-1 GB cluster setting), so a file count ≥ `target` can
+    OVER-count tasks; it is therefore confirmed with the RDD partition
+    count before the scan is treated as parallel. Non-file-backed plans
+    (in-memory relation, shuffle-rooted frame) list no files and go
+    straight to the RDD probe. Documented BOUNDARY: do not apply this
+    to scan-bound paths where the shuffle itself would dominate
+    (VERDICT r15 — prefer lowering spark.sql.files.maxPartitionBytes
+    there)."""
     if target is None:
         target = max(2, df.sparkSession.sparkContext.defaultParallelism // 2)
     try:
-        n_input = len(df.inputFiles())
+        n_files = len(df.inputFiles())
     except Exception:
-        n_input = 0
-    if n_input == 0:
-        # non-file-backed plan (in-memory relation, shuffle-rooted
-        # frame): no file metadata to read, use the RDD probe as before
-        n_input = df.rdd.getNumPartitions()
-    if n_input < target:
+        n_files = 0
+    if 0 < n_files < target or df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df
 

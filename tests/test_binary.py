@@ -116,7 +116,7 @@ def test_hamming_cut_uses_window_group_limit(embeddings):
 
 
 def test_arrow_twin_matches_sql_twin(embeddings):
-    """The Arrow (LUT-popcount mapInPandas) path must reproduce the SQL
+    """The Arrow (SWAR-popcount mapInPandas) path must reproduce the SQL
     twin rank-for-rank, hamming-for-hamming — including through the
     pre-packed-input shape a materialized index would use."""
     from aeuc_vector_db_spark.operators.binary import (

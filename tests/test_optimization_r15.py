@@ -110,6 +110,37 @@ def test_ensure_min_parallelism_noop_when_already_parallel(spark):
     assert out is df  # no extra exchange inserted
 
 
+def test_ensure_min_parallelism_many_small_files_one_split(spark, tmp_path):
+    """Many small files packed into ONE scan split: the file count
+    over-counts tasks, so the guard must confirm with the split count
+    and spread the scan."""
+    path = str(tmp_path / "small_files")
+    spark.range(800).repartition(8).write.parquet(path)
+    packing = {
+        "spark.sql.files.openCostInBytes": "1",
+        "spark.sql.files.minPartitionNum": "1",
+        "spark.sql.files.maxPartitionBytes": "128m",
+    }
+    saved = {k: spark.conf.get(k, None) for k in packing}
+    for k, v in packing.items():
+        spark.conf.set(k, v)
+    try:
+        df = spark.read.parquet(path)
+        assert len(df.inputFiles()) >= 4
+        assert df.rdd.getNumPartitions() == 1
+        out = ensure_min_parallelism(df, target=4)
+        assert out.rdd.getNumPartitions() == 4
+        assert collections.Counter(r["id"] for r in out.collect()) == collections.Counter(
+            range(800)
+        )
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
 def test_io_state_reports_all_three_noise_axes():
     # loadavg + iowait + total + steal ticks; ticks monotone across reads
     from bench import _io_state

@@ -6,6 +6,8 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from aeuc_vector_db_spark.operators.ann import pq_encode, pq_search_batch, pq_train
+from aeuc_vector_db_spark.operators.binary import binary_search_rerank, binary_search_rerank_arrow
 from aeuc_vector_db_spark.operators.search import knn_search_batch, knn_search_batch_arrow
 from aeuc_vector_db_spark.sources.tables import load_table
 
@@ -50,14 +52,42 @@ def test_arrow_path_empty_queries_raises(emb, spark):
         knn_search_batch_arrow(emb, empty)
 
 
-def test_arrow_path_tied_scores_break_by_id(spark):
+def _pq_arrow(corpus, q, top_k):
+    books = pq_train(corpus, m=3, nbits=1, seed=7, iters=2, sample_mod=1)
+    return pq_search_batch(pq_encode(corpus, books), books, q, top_k=top_k)
+
+
+#: every kernel on the shared Arrow top-k core → (arrow path, SQL twin)
+ARROW_KERNELS = {
+    "exact": (
+        lambda c, q, k: knn_search_batch_arrow(c, q, top_k=k),
+        lambda c, q, k: knn_search_batch(c, q, top_k=k),
+    ),
+    "pq": (_pq_arrow, None),
+    # refine_r = k: the Hamming top-R cut itself sits on the tie boundary
+    "binary": (
+        lambda c, q, k: binary_search_rerank_arrow(c, q, dim=3, top_k=k, refine_r=k),
+        lambda c, q, k: binary_search_rerank(c, q, dim=3, top_k=k, refine_r=k),
+    ),
+}
+
+
+@pytest.mark.parametrize("layout", ["coalesce1", "repartition16"])
+@pytest.mark.parametrize("kernel", list(ARROW_KERNELS))
+def test_arrow_path_tied_scores_break_by_id(spark, kernel, layout):
     """Identical vectors (all scores tied) must yield ids ascending —
     the per-batch candidate cut may not drop a lower id in favor of a
-    higher one that appeared earlier in the batch."""
+    higher one that appeared earlier in the batch, on one partition or
+    spread over many."""
     rows = [(i, [1.0, 2.0, 3.0]) for i in (50, 7, 99, 1, 23, 64, 8, 31)]
     corpus = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    q = spark.createDataFrame([(0, [1.0, 2.0, 3.0])], "query_id long, query_embedding array<double>")
-    res = knn_search_batch_arrow(corpus, q, top_k=4).collect()
+    corpus = corpus.coalesce(1) if layout == "coalesce1" else corpus.repartition(16)
+    q = spark.createDataFrame(
+        [(0, [1.0, 2.0, 3.0])], "query_id long, query_embedding array<double>"
+    )
+    arrow, sql_twin = ARROW_KERNELS[kernel]
+    res = sorted(arrow(corpus, q, 4).collect(), key=lambda r: r["rank"])
     assert [r["vec_id"] for r in res] == [1, 7, 8, 23]
-    sql = knn_search_batch(corpus, q, top_k=4).collect()
-    assert [r["vec_id"] for r in sql] == [r["vec_id"] for r in res]
+    if sql_twin is not None:
+        sql = sorted(sql_twin(corpus, q, 4).collect(), key=lambda r: r["rank"])
+        assert [r["vec_id"] for r in sql] == [r["vec_id"] for r in res]
